@@ -283,6 +283,10 @@ def test_index_manifest_validates_buckets_and_hash(spark, tmp_path):
     # caller passes the WRONG modulus: loud, not empty
     with pytest.raises(ValueError, match="n_buckets"):
         read_posting_lists(spark, path, ["hash"], n_buckets=64)
+    # ... also when there is no term to look up
+    with pytest.raises(ValueError, match="n_buckets"):
+        read_posting_lists(spark, path, [], n_buckets=64)
+    assert read_posting_lists(spark, path, []).count() == 0
 
     # diverged hash sentinel: loud, not wrong buckets
     manifest["sentinel_hash"] += 1

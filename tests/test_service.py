@@ -68,6 +68,25 @@ def test_batch_contracts(svc):
     assert res2["job_id"] is None and res2["status"] == "completed"
 
 
+def test_sync_batch_reports_failed_job(svc, monkeypatch):
+    """Sync batch_ingest answers with the job's real outcome: a body
+    that raises gives status "failed" and the job's error."""
+    from vector_search_service_spark.service import SearchService
+
+    svc.catalog.create_collection("sfail")
+
+    def boom(self, raw, collection_id):
+        raise RuntimeError("ingest exploded")
+
+    monkeypatch.setattr(SearchService, "_ingest_frame", boom)
+    res = svc.batch_ingest([{"content": "some words here"}],
+                           collection_id="sfail", processing_mode="sync")
+    assert res["status"] == "failed"
+    assert res["error"] == "ingest exploded"
+    assert res["job_id"] is None
+    assert svc.jobs.list_jobs(limit=1)[0].status.value == "failed"
+
+
 def test_document_listing_delete_stats(svc):
     svc.ingest_document("alpha beta gamma delta " * 10, collection_id="kb2")
     listing = svc.list_documents("kb2")

@@ -1,15 +1,18 @@
 """Collection catalog + mutable document store on immutable parquet.
 
-Mirrors the reference's data model (SURVEY.md §1): a ``collections``
-catalog table and one shared ``documents`` chunk table, documents
-partitioned by ``collection_id``. PostgreSQL features are re-owned
-explicitly:
+Mirrors the reference's data model (SURVEY.md §1): a collections
+catalog and one shared ``documents`` chunk table, documents
+partitioned by ``collection_id``. The catalog is driver-side metadata,
+the way Spark keeps its own table catalog: one ``catalog.json``
+document, read with ``json.load`` on every lookup — the reference's
+single-row PostgreSQL lookup (S1), with no Spark job. Spark jobs run
+only over the documents. PostgreSQL features are re-owned explicitly:
 
 - uniqueness of collection ``name`` (``src/db/models.py:16``) →
-  existence-check-then-append (S8);
+  check-then-insert under the catalog mutex (S8);
 - FK ``ON DELETE CASCADE`` (``scripts/init-db.sql:20``) → write-path
   ordering: drop the collection's document partition, then its catalog
-  row (S7);
+  entry (S7);
 - targeted DELETE (S6, ``src/core/vector_store.py:360-392``) →
   anti-join + dynamic partition overwrite of only the affected
   partition;
@@ -26,6 +29,7 @@ are set by this writer.
 from __future__ import annotations
 
 import contextlib
+import datetime
 import json
 import os
 import shutil
@@ -34,17 +38,6 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-COLLECTION_SCHEMA = T.StructType([
-    T.StructField("id", T.LongType(), False),
-    T.StructField("name", T.StringType(), False),
-    T.StructField("description", T.StringType(), True),
-    T.StructField("doc_metadata", T.MapType(T.StringType(), T.StringType()), True),
-    T.StructField("embedding_dimension", T.IntegerType(), False),
-    T.StructField("distance_function", T.StringType(), False),
-    T.StructField("created_at", T.TimestampType(), False),
-    T.StructField("updated_at", T.TimestampType(), False),
-])
 
 DOCUMENT_SCHEMA = T.StructType([
     T.StructField("collection_id", T.LongType(), False),
@@ -57,27 +50,36 @@ DOCUMENT_SCHEMA = T.StructType([
     T.StructField("updated_at", T.TimestampType(), False),
 ])
 
+# maintained per-collection stats kept in each catalog entry beside the row
+_STATS_KEYS = ("document_count", "size_bytes")
+
+
+def _row(entry: dict) -> dict:
+    """A catalog entry as ``get_collection`` returns it: the collection
+    row without its stats, timestamps as naive local datetimes (what
+    ``collect()`` gives for a Spark ``TimestampType``)."""
+    row = {k: v for k, v in entry.items() if k not in _STATS_KEYS}
+    for k in ("created_at", "updated_at"):
+        row[k] = datetime.datetime.fromisoformat(row[k])
+    return row
+
 
 class Catalog:
-    """Engine-owned table layout under ``root``:
-    ``root/collections/`` (tiny, overwrite-on-change) and
+    """Engine-owned layout under ``root``: ``root/catalog.json`` (one
+    entry per collection name: the collection row plus its maintained
+    ``document_count`` and ``size_bytes``) and
     ``root/documents/collection_id=<id>/`` (hive-partitioned)."""
 
     def __init__(self, spark: SparkSession, root: str, *,
-                 maintain_fts_index: bool = False, keep_versions: int = 2):
+                 maintain_fts_index: bool = False):
         self.spark = spark
         self.root = root
-        # how many catalog versions survive pruning (>=2: the live one
-        # plus the immediately-previous for in-flight readers). Larger
-        # values enable time travel via collections_at()/history().
-        self.keep_versions = max(2, keep_versions)
-        self.collections_path = os.path.join(root, "collections")
         self.documents_path = os.path.join(root, "documents")
-        self.stats_path = os.path.join(root, "stats")
-        self._pointer_path = os.path.join(root, "collections.current")
+        self._catalog_path = os.path.join(root, "catalog.json")
         # in-process mutation serialization: the service's async batch
-        # jobs share one Catalog across threads (ADVICE r1) — re-entrant
-        # so create_collection can call _rewrite_collections under it
+        # jobs share one Catalog across threads (ADVICE r1). Every
+        # read-modify-write of catalog.json holds it; re-entrant so
+        # _save can take it again through _write_lock
         self._mutex = threading.RLock()
         # opt-in maintained postings (the auto-maintained-GIN parity
         # point): every document mutation below co-mutates the index
@@ -89,30 +91,33 @@ class Catalog:
 
     # -- collections (S1, S2, S8) -----------------------------------------
 
-    def _current_collections_dir(self) -> str:
-        """Resolve the live catalog version via the pointer file; fall
-        back to the legacy unversioned layout."""
-        if os.path.exists(self._pointer_path):
-            with open(self._pointer_path) as f:
-                return os.path.join(self.root, f.read().strip())
-        return self.collections_path
+    def _load(self) -> dict[str, dict]:
+        """The catalog document, collection name → entry. Read fresh on
+        every call, with no cache and no lock: ``_save`` swaps the file
+        with ``os.replace``, so a reader sees the previous or the new
+        document, always whole."""
+        try:
+            with open(self._catalog_path) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return {}
 
-    def _collections_exists(self) -> bool:
-        return os.path.exists(os.path.join(self._current_collections_dir(), "_SUCCESS"))
-
-    def collections(self) -> DataFrame:
-        if not self._collections_exists():
-            return self.spark.createDataFrame([], COLLECTION_SCHEMA)
-        return self.spark.read.schema(COLLECTION_SCHEMA).parquet(
-            self._current_collections_dir()
-        )
+    def _save(self, catalog: dict[str, dict]) -> None:
+        """The only writer of ``catalog.json``: a temp file, then
+        ``os.replace``, under the write lock. A crash before the
+        replace leaves the previous document live."""
+        with self._write_lock():
+            tmp = self._catalog_path + ".tmp"
+            with open(tmp, "w") as f:
+                json.dump(catalog, f)
+            os.replace(tmp, self._catalog_path)
 
     def get_collection(self, name: str) -> dict | None:
-        rows = self.collections().filter(F.col("name") == name).limit(1).collect()
-        return rows[0].asDict(recursive=True) if rows else None
+        entry = self._load().get(name)
+        return _row(entry) if entry is not None else None
 
     def list_collections(self) -> list[dict]:
-        return [r.asDict(recursive=True) for r in self.collections().orderBy("id").collect()]
+        return [_row(e) for e in sorted(self._load().values(), key=lambda e: e["id"])]
 
     def create_collection(self, name: str, description: str | None = None, *,
                           embedding_dimension: int = 1024,
@@ -120,47 +125,51 @@ class Catalog:
                           metadata: dict[str, str] | None = None) -> dict:
         """S8 — reference defaults dim=1024 / cosine
         (``src/core/vector_store.py:15-42``); name uniqueness enforced
-        by check-then-append (single-writer catalog assumption; a real
-        deployment would use Delta MERGE ``whenNotMatchedInsert``)."""
-        with self._mutex:  # check-then-append is atomic in-process
-            existing = self.get_collection(name)
-            if existing is not None:
+        by check-then-insert under the catalog mutex (single-writer
+        catalog assumption; the lock file in ``_save`` makes a second
+        writer process fail loudly)."""
+        with self._mutex:
+            catalog = self._load()
+            if name in catalog:
                 raise ValueError(f"collection {name!r} already exists")
-            cur = self.collections()
-            next_id = (cur.agg(F.coalesce(F.max("id"), F.lit(0)).alias("m")).collect()[0]["m"] or 0) + 1
-            row_df = self.spark.createDataFrame(
-                [(next_id, name, description, metadata or {}, embedding_dimension, distance_function)],
-                T.StructType(COLLECTION_SCHEMA.fields[:6]),
-            ).withColumn("created_at", F.current_timestamp()) \
-             .withColumn("updated_at", F.current_timestamp())
-            self._rewrite_collections(cur.unionByName(row_df))
-            self._set_stats(next_id, 0)  # stats maintained from birth
-            return self.get_collection(name)  # re-read: timestamps materialized
+            next_id = max((e["id"] for e in catalog.values()), default=0) + 1
+            now = datetime.datetime.now().isoformat()
+            catalog[name] = {
+                "id": next_id, "name": name, "description": description,
+                "doc_metadata": dict(metadata or {}),
+                "embedding_dimension": int(embedding_dimension),
+                "distance_function": distance_function,
+                "created_at": now, "updated_at": now,
+                # stats maintained from birth
+                "document_count": 0, "size_bytes": self._partition_bytes(next_id),
+            }
+            self._save(catalog)
+            return _row(catalog[name])
 
     def delete_collection(self, name: str) -> bool:
         """S7 — engine-owned cascade: documents partition first, then
-        the catalog row (``src/core/vector_store.py:74-90``)."""
+        the catalog entry (``src/core/vector_store.py:74-90``)."""
         with self._mutex:
-            coll = self.get_collection(name)
+            catalog = self._load()
+            coll = catalog.pop(name, None)
             if coll is None:
                 return False
-            part_dir = os.path.join(self.documents_path, f"collection_id={coll['id']}")
+            part_dir = self._part_dir(coll["id"])
             if os.path.exists(part_dir):
                 shutil.rmtree(part_dir)
             if self.postings is not None:
                 self.postings.rewrite(coll["id"], None)
-            if os.path.exists(self._stats_file(coll["id"])):
-                os.remove(self._stats_file(coll["id"]))
-            self._rewrite_collections(self.collections().filter(F.col("name") != name))
+            self._save(catalog)
             return True
 
     @contextlib.contextmanager
     def _write_lock(self):
         """Catalog mutation guard: in-process RLock (the service's own
         job threads serialize) + an advisory cross-process lock file so
-        a SECOND writer process fails loudly instead of corrupting the
-        swap (single-writer is the documented contract; Delta/Iceberg
-        commit protocols are the real-cluster upgrade)."""
+        a SECOND writer process fails loudly instead of overwriting the
+        first one's catalog (single-writer is the documented contract;
+        Delta/Iceberg commit protocols are the real-cluster upgrade).
+        The lock file is not re-entrant: only ``_save`` takes it."""
         with self._mutex:
             lock = os.path.join(self.root, "catalog.lock")
             os.makedirs(self.root, exist_ok=True)
@@ -170,8 +179,8 @@ class Catalog:
                 raise RuntimeError(
                     f"catalog at {self.root!r} is locked by another writer "
                     f"({lock} exists); concurrent catalog mutation is not "
-                    "supported on plain parquet — remove the stale lock if "
-                    "no other writer is alive"
+                    "supported — remove the stale lock if no other writer "
+                    "is alive"
                 ) from None
             try:
                 os.write(fd, str(os.getpid()).encode())
@@ -180,84 +189,6 @@ class Catalog:
             finally:
                 with contextlib.suppress(FileNotFoundError):
                     os.remove(lock)
-
-    def _rewrite_collections(self, df: DataFrame) -> None:
-        """Versioned swap: write ``collections_v{n+1}``, then flip the
-        pointer file atomically (os.replace of a one-line file). A
-        reader always sees a complete live version — there is no window
-        with no catalog on disk (the old rmtree→replace scheme had
-        one), and a crash mid-rewrite leaves the previous version
-        live. Old versions are pruned after the flip."""
-        with self._write_lock():
-            cur = self._current_collections_dir()
-            base = os.path.basename(cur)
-            ver = int(base.rsplit("_v", 1)[1]) if "_v" in base else 0
-            new_name = f"collections_v{ver + 1}"
-            new_dir = os.path.join(self.root, new_name)
-            df.coalesce(1).write.mode("overwrite").parquet(new_dir)
-            tmp_ptr = self._pointer_path + ".tmp"
-            with open(tmp_ptr, "w") as f:
-                f.write(new_name)
-            os.replace(tmp_ptr, self._pointer_path)
-            # prune superseded versions (and the legacy flat dir),
-            # keeping the newest ``keep_versions`` so (a) a reader that
-            # resolved the pointer just before the flip still completes
-            # and (b) history()/collections_at() can time-travel over
-            # the retained window — the plain-parquet sketch of Delta's
-            # version log.
-            # ``base`` (the just-superseded dir) always survives one
-            # more cycle — on the one-time legacy upgrade the flat
-            # "collections" dir would otherwise be rmtree'd under an
-            # in-flight reader that resolved it just before the flip;
-            # it is pruned on the FOLLOWING rewrite instead.
-            keep = {new_name, base} | {
-                f"collections_v{v}"
-                for v in range(max(1, ver + 2 - self.keep_versions), ver + 2)
-            }
-            for entry in os.listdir(self.root):
-                full = os.path.join(self.root, entry)
-                if entry in keep or not os.path.isdir(full):
-                    continue
-                if entry == "collections" or (
-                    entry.startswith("collections_v")
-                    and entry.rsplit("_v", 1)[1].isdigit()
-                ):
-                    shutil.rmtree(full, ignore_errors=True)
-
-    # -- catalog history / time travel -------------------------------------
-
-    def catalog_history(self) -> list[dict]:
-        """Retained catalog versions, oldest→newest: [{version, path,
-        modified_at, is_current}]. Retention is ``keep_versions``."""
-        import datetime
-
-        cur = os.path.basename(self._current_collections_dir())
-        out = []
-        for entry in sorted(os.listdir(self.root)):
-            if not (entry.startswith("collections_v")
-                    and entry.rsplit("_v", 1)[1].isdigit()):
-                continue
-            full = os.path.join(self.root, entry)
-            if not os.path.isdir(full):
-                continue
-            out.append({
-                "version": int(entry.rsplit("_v", 1)[1]),
-                "path": full,
-                "modified_at": datetime.datetime.fromtimestamp(
-                    os.path.getmtime(full), tz=datetime.timezone.utc),
-                "is_current": entry == cur,
-            })
-        return sorted(out, key=lambda d: d["version"])
-
-    def collections_at(self, version: int) -> DataFrame:
-        """Time-travel read of a retained catalog version."""
-        path = os.path.join(self.root, f"collections_v{version}")
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            retained = [h["version"] for h in self.catalog_history()]
-            raise ValueError(
-                f"catalog version {version} not retained (have {retained}; "
-                f"raise keep_versions to widen the window)")
-        return self.spark.read.schema(COLLECTION_SCHEMA).parquet(path)
 
     # -- documents (S3, S5, S6) -------------------------------------------
 
@@ -355,7 +286,7 @@ class Catalog:
                 # compact_index call (r11 verdict next-round #4);
                 # no-op except every ~AUTO_COMPACT_SMALL_FILES batches
                 self.postings.maybe_compact(coll["id"])
-            self._bump_stats(coll["id"], n)
+            self._store_stats(collection_name, delta=n)
             return n
 
     def compact_index(self, collection_name: str) -> int:
@@ -399,12 +330,12 @@ class Catalog:
             # dynamic overwrite of an EMPTY frame writes no partitions
             # and would silently leave the old files — drop the
             # partition directory instead
-            part_dir = os.path.join(self.documents_path, f"collection_id={coll['id']}")
+            part_dir = self._part_dir(coll["id"])
             if os.path.exists(part_dir):
                 shutil.rmtree(part_dir)
             if self.postings is not None:
                 self.postings.rewrite(coll["id"], None)
-            self._set_stats(coll["id"], 0)
+            self._store_stats(collection_name, 0)
             return before
         with self._dynamic_overwrite():
             (
@@ -417,7 +348,7 @@ class Catalog:
             # re-read: the lazy `remaining` plan is bound to the
             # overwritten files
             self.postings.rewrite(coll["id"], self.documents(collection_name))
-        self._set_stats(coll["id"], after)
+        self._store_stats(collection_name, after)
         return before - after
 
     def upsert_documents(self, collection_name: str, docs: DataFrame) -> dict:
@@ -456,7 +387,7 @@ class Catalog:
         n_after = self.documents(collection_name).count()
         if self.postings is not None:
             self.postings.rewrite(coll["id"], self.documents(collection_name))
-        self._set_stats(coll["id"], n_after)
+        self._store_stats(collection_name, n_after)
         return {
             "inserted": n_after - n_before if n_after >= n_before else 0,
             "updated": n_in - max(n_after - n_before, 0),
@@ -466,77 +397,59 @@ class Catalog:
         """A1 + A2 — document count and storage bytes
         (``src/core/vector_store.py:394-427``).
 
-        O(1) read: every document mutation below co-maintains a tiny
-        per-collection stats file (the ``PostingsStore`` discipline),
-        matching the reference's cheap catalog-metadata semantics —
-        ``pg_total_relation_size`` reads pg_class, it does not scan the
-        relation. A store written before stats existed backfills once
-        (one count job + one partition listing), then reads O(1).
+        O(1) read with no Spark job: every document mutation below
+        co-maintains the count and byte size in the collection's
+        catalog entry, matching the reference's cheap catalog-metadata
+        semantics — ``pg_total_relation_size`` reads pg_class, it does
+        not scan the relation.
 
         ``refresh=True`` is the heal path (r9 advisor): a crash between
-        a parquet write and its stats bump leaves the maintained count
-        stale, and the O(1) read would trust the file forever — refresh
-        recounts from the store and rewrites the stats row (one count
-        job, same cost as the legacy backfill)."""
-        coll = self._resolve(collection_name)
-        with self._mutex:
-            st = None if refresh else self._load_stats(coll["id"])
-            if st is None:  # legacy/backfill path or explicit refresh
+        a parquet write and its stats update leaves the maintained
+        count stale, and the O(1) read would trust it forever — refresh
+        recounts from the store and rewrites the entry's stats (one
+        count job)."""
+        if refresh:
+            with self._mutex:
+                self._resolve(collection_name)
                 st = self._store_stats(
-                    coll["id"], self.documents(collection_name).count()
-                )
-        return {"collection": coll["name"], **st}
+                    collection_name, self.documents(collection_name).count())
+        else:
+            st = self._load().get(collection_name)
+            if st is None:
+                raise ValueError(f"Collection '{collection_name}' not found")
+        return {"collection": collection_name,
+                **{k: st[k] for k in _STATS_KEYS}}
 
     # -- maintained stats (A2; reference src/core/vector_store.py:413-417) --
 
     def _part_dir(self, collection_id: int) -> str:
         return os.path.join(self.documents_path, f"collection_id={collection_id}")
 
-    def _stats_file(self, collection_id: int) -> str:
-        return os.path.join(self.stats_path, f"collection_{collection_id}.json")
+    def _partition_bytes(self, collection_id: int) -> int:
+        return sum(
+            os.path.getsize(os.path.join(dirpath, f))
+            for dirpath, _dirs, files in os.walk(self._part_dir(collection_id))
+            for f in files
+        )
 
-    def _load_stats(self, collection_id: int) -> dict | None:
-        path = self._stats_file(collection_id)
-        if not os.path.exists(path):
-            return None
-        with open(path) as f:
-            return json.load(f)
-
-    def _store_stats(self, collection_id: int, document_count: int) -> dict:
-        """Write the stats row. The count is maintained exactly by the
+    def _store_stats(self, collection_name: str, count: int | None = None, *,
+                     delta: int = 0) -> dict:
+        """Rewrite one catalog entry's stats and return the entry. The
+        count is set to ``count`` (kept when None) plus ``delta`` — the
         mutation's own arithmetic; the byte size is a listing of the
-        partition directory the mutation just wrote (OS-cache-warm,
-        no Spark job). Atomic rename so readers never see a torn row."""
-        size = 0
-        part_dir = self._part_dir(collection_id)
-        if os.path.exists(part_dir):
-            for dirpath, _dirs, files in os.walk(part_dir):
-                size += sum(
-                    os.path.getsize(os.path.join(dirpath, f)) for f in files
-                )
-        st = {"document_count": int(document_count), "size_bytes": size}
-        os.makedirs(self.stats_path, exist_ok=True)
-        tmp = self._stats_file(collection_id) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(st, f)
-        os.replace(tmp, self._stats_file(collection_id))
-        return st
-
-    def _bump_stats(self, collection_id: int, delta: int) -> None:
-        """Incremental count maintenance on a write path. No stats file
-        yet (legacy store) → leave it absent; the next collection_stats
-        read backfills exactly rather than trusting a partial delta.
-        The load+store pair is guarded by the catalog RLock (reentrant —
-        every mutation path already holds it) so two concurrent writers
-        cannot lose an update; a crash between the parquet write and
-        this bump is healed by ``collection_stats(refresh=True)``."""
+        partition directory the mutation just wrote (OS-cache-warm, no
+        Spark job). The read-modify-write holds the catalog RLock
+        (re-entrant — every mutation path already holds it), so two
+        writer threads cannot lose an update; a crash between a parquet
+        write and this call is healed by ``collection_stats(refresh=True)``."""
         with self._mutex:
-            st = self._load_stats(collection_id)
-            if st is not None:
-                self._store_stats(collection_id, st["document_count"] + delta)
-
-    def _set_stats(self, collection_id: int, document_count: int) -> None:
-        self._store_stats(collection_id, document_count)
+            catalog = self._load()
+            entry = catalog[collection_name]
+            base = entry["document_count"] if count is None else count
+            entry["document_count"] = int(base) + delta
+            entry["size_bytes"] = self._partition_bytes(entry["id"])
+            self._save(catalog)
+            return entry
 
     def compact_collection(self, collection_name: str, *,
                            target_files: int = 1) -> dict:
@@ -546,7 +459,7 @@ class Catalog:
         the small-file count, not data volume, kills scan planning).
         Same single-partition rewrite envelope as a targeted delete."""
         coll = self._resolve(collection_name)
-        part_dir = os.path.join(self.documents_path, f"collection_id={coll['id']}")
+        part_dir = self._part_dir(coll["id"])
         n_before = 0
         if os.path.exists(part_dir):
             n_before = sum(
@@ -566,9 +479,7 @@ class Catalog:
             1 for _, _, files in os.walk(part_dir)
             for f in files if f.endswith(".parquet")
         )
-        st = self._load_stats(coll["id"])
-        if st is not None:  # row count unchanged; byte size rewritten
-            self._store_stats(coll["id"], st["document_count"])
+        self._store_stats(collection_name)  # count unchanged; byte size rewritten
         return {"files_before": n_before, "files_after": n_after}
 
     # -- helpers -----------------------------------------------------------

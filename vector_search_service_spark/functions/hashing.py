@@ -67,21 +67,6 @@ def _perm_coeffs(seed: int) -> tuple[int, int]:
     return (a or 1), b
 
 
-def shingle_hashes_col(shingles: Column) -> Column:
-    """Base integer hashes: one md5 per shingle, low 31 bits."""
-    return F.transform(
-        shingles,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long") % F.lit(1 << 31),
-    )
-
-
-def sql_shingle_hashes_expr(shingles: str) -> str:
-    return (
-        f"list_transform({shingles}, s -> "
-        f"CAST(('0x' || substr(md5(s), 1, 8))::UBIGINT % 2147483648 AS BIGINT))"
-    )
-
-
 # Rolling token-hash shingles (r4, judge r3 #7): hash each TOKEN once
 # (md5 low 31 bits, reduced mod P so the fold below is closed over
 # [0, P)), then combine every k-token window by Horner's rule

@@ -325,8 +325,9 @@ def minhash_lsh_pairs(df: DataFrame, *, text_col: str = "text",
     # localCheckpointed (per-run, like ``keyed``/``pairs`` above —
     # never cross-run state), now feeds both joins: 1 corpus scan,
     # 1 UDF pass, strictly ≤ the old row count. Plan diff committed
-    # (plans/r13/{curate_corpus,minhash_lsh_dedup}_{before,after}.txt:
-    # 2 ArrowEvalPython → 1, 3 parquet scans → 2).
+    # (plans/r13/{curate_corpus,minhash_lsh_dedup}_{before,after}.txt):
+    # the shingle pass moves behind the checkpoint boundary, so the
+    # visible ArrowEvalPython nodes go from 4 to 0.
     cand_ids = (
         pairs.select(F.col("id_a").alias(id_col))
         .union(pairs.select(F.col("id_b").alias(id_col)))

@@ -138,12 +138,11 @@ def read_posting_lists(spark, path: str, terms: list[str], *,
     reader's Python hash is checked against the writer's Spark-computed
     sentinel — silent wrong-bucket pruning is impossible on a
     manifested index. Pre-manifest indexes fall back to the caller /
-    default pairing (the r12 trust model)."""
+    default pairing (the r12 trust model). The checks run before the
+    empty-``terms`` return, so a bad pairing fails on every call."""
     import json
     import os
 
-    if not terms:
-        return spark.createDataFrame([], "doc_id long, lexeme string")
     from ..functions.hashing import xxhash64_py
 
     manifest_path = os.path.join(path, INDEX_MANIFEST)
@@ -166,6 +165,8 @@ def read_posting_lists(spark, path: str, terms: list[str], *,
                 f"buckets with a mismatched hash")
     elif n_buckets is None:
         n_buckets = DEFAULT_LEXEME_BUCKETS
+    if not terms:
+        return spark.createDataFrame([], "doc_id long, lexeme string")
     buckets = sorted({xxhash64_py(t.encode()) % n_buckets for t in terms})
     return (
         spark.read.parquet(path)
@@ -227,8 +228,9 @@ class PostingsStore:
 
     Layout (r12, crash-atomic): ``root/postings/<cid>/v{n}/`` parquet
     snapshots plus a one-line pointer file ``root/postings/<cid>/
-    current`` — the exact versioned-pointer discipline the catalog
-    uses for the collections table (``catalog._rewrite_collections``).
+    current`` — the one place in the store where parquet data has to
+    be swapped atomically (the catalog is a single JSON document,
+    swapped with ``os.replace``).
     Rows are one (document_id, lexeme) pair per distinct stored lexeme
     per chunk; per-collection directories keep maintenance cost equal
     to the touched collection, never the table. Query terms are
@@ -246,8 +248,8 @@ class PostingsStore:
     - Lock-free readers (``service.search`` → ``matched_ids`` take no
       mutex by design) resolve the pointer once at DataFrame
       construction and read an immutable snapshot directory; the
-      superseded version survives one further mutation cycle (the
-      catalog's ``keep`` grace) so an in-flight probe that resolved
+      superseded version survives one further mutation cycle (a
+      grace window) so an in-flight probe that resolved
       the pointer just before a flip still completes.
     - ``append`` adds files to the LIVE snapshot (no version bump — a
       full-copy version per ingest batch would make every append
@@ -287,7 +289,7 @@ class PostingsStore:
         self.spark = spark
         self.path = os.path.join(root, "postings")
 
-    # -- versioned-pointer plumbing (mirrors catalog._rewrite_collections)
+    # -- versioned-pointer plumbing
 
     def _coll_dir(self, collection_id: int) -> str:
         import os
@@ -329,8 +331,7 @@ class PostingsStore:
 
     def _prune(self, collection_id: int, keep: set[str]) -> None:
         """Remove superseded snapshot dirs EXCEPT ``keep`` (the new
-        version and the just-superseded one — reader grace, exactly
-        the collections-table ``keep`` discipline)."""
+        version and the just-superseded one — reader grace)."""
         import os
         import shutil
 
@@ -348,8 +349,7 @@ class PostingsStore:
     def _write_snapshot(self, collection_id: int, rows: DataFrame) -> None:
         """Write ``rows`` as snapshot v{n+1}, flip, prune with grace.
         The old snapshot's files are never touched before the flip —
-        a crash mid-write leaves the previous version live (the
-        ``collections.current`` guarantee, catalog.py)."""
+        a crash mid-write leaves the previous version live."""
         import os
 
         cur = self._current_version(collection_id)

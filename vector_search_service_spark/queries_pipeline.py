@@ -114,10 +114,11 @@ def q_semi_join_resolve(spark, sf_dir):
     matches ~49% of orders, so the build side scales linearly with the
     fact table — at 100 TB a forced broadcast OOMs. AQE picks the join
     strategy from the measured build size (broadcast at bench scale,
-    shuffled hash at 100 TB). The *true* J1 — collections filtered to
-    one name, a ≤1-row build side — lives in ``catalog.py`` (see
-    ``Catalog._resolve``) and genuinely broadcasts at any scale; this
-    entry is the unbounded-build-side variant of the same shape."""
+    shuffled hash at 100 TB). The service's own J1 is no join at all:
+    ``Catalog._resolve`` looks the name up in the driver-side
+    ``catalog.json`` and ``Catalog.documents`` filters on the literal
+    ``collection_id`` (partition pruning); this entry is the
+    unbounded-build-side variant of the same shape."""
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     return (

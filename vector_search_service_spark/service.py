@@ -218,13 +218,16 @@ class SearchService:
             return {"successful": ok, "failed": failed}
 
         if processing_mode == "sync":
-            self.jobs.run_sync(job, body)
-            return {
+            done = self.jobs.run_sync(job, body)
+            out = {
                 "job_id": None, "documents_queued": len(documents),
-                "status": "completed", "status_endpoint": None,
+                "status": done.status.value, "status_endpoint": None,
                 # reference sets None in both modes (documents.py:270,295)
                 "estimated_completion_time": None,
             }
+            if done.error is not None:
+                out["error"] = done.error
+            return out
         self.jobs.submit(job, body)
         return {
             "job_id": job.job_id,

@@ -17,9 +17,9 @@ is made durable across triggers.
 At 100 TB: the rollup table is tiny (groups, not events), so the merge
 groupBy shuffles only (touched ∪ existing) group rows; the event
 stream is aggregated map-side within each micro-batch. The versioned
-swap write gives readers an always-live table (same mechanism as
-``catalog._rewrite_collections``). With Delta in place of parquet the
-swap becomes a MERGE on the same keys.
+swap write gives readers an always-live table (same mechanism as the
+snapshot pointer of ``fts_index.PostingsStore``). With Delta in place
+of parquet the swap becomes a MERGE on the same keys.
 
 Proven in tests/test_rollup.py: replaying the events table through
 N micro-batches yields byte-identical rollup rows to one batch
@@ -78,7 +78,7 @@ def finalize(rollup: DataFrame) -> DataFrame:
 class RollupStore:
     """Versioned-parquet rollup table with an atomic pointer flip
     (readers always see a complete version; same write-safety story as
-    the catalog's collections swap)."""
+    the postings snapshots)."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark, self.root = spark, root
