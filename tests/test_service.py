@@ -87,6 +87,36 @@ def test_sync_batch_reports_failed_job(svc, monkeypatch):
     assert svc.jobs.list_jobs(limit=1)[0].status.value == "failed"
 
 
+def test_warm_ingest_document_job_budget(spark, tmp_path):
+    """A warm single-document ingest on a maintained-postings service
+    runs 7 Spark jobs: the staged-frame and add_documents checkpoints,
+    the dimension-check aggregate (two jobs), the documents and
+    postings parquet writes, and one outcome collect — the only job
+    launched from ingest.py itself."""
+    import uuid
+
+    from vector_search_service_spark.service import SearchService
+
+    svc = SearchService(spark, str(tmp_path / "store"), maintain_fts_index=True)
+    svc.ingest_document("warm up alpha beta " * 30, collection_id="jb")
+    svc.ingest_document("warm up gamma delta " * 30, collection_id="jb")
+    sc = spark.sparkContext
+    group = f"ingest-budget-{uuid.uuid4()}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        res = svc.ingest_document("budgeted document zeta eta " * 30,
+                                  collection_id="jb")
+    finally:
+        sc.setJobGroup("", "")
+    assert res["status"] == "completed"
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) < 9
+    assert len(jobs) == 7
+    store = sc._jsc.sc().statusStore()
+    names = [store.job(j).name() for j in jobs]
+    assert sum("ingest.py" in n for n in names) == 1, names
+
+
 def test_document_listing_delete_stats(svc):
     svc.ingest_document("alpha beta gamma delta " * 10, collection_id="kb2")
     listing = svc.list_documents("kb2")

@@ -224,7 +224,10 @@ class Catalog:
         mutating source) must not be able to pass the dimension check
         on one evaluation and write different rows on the next — the
         validate, the parquet append, the postings append and the stats
-        bump all consume the same materialized rows (r9 advisor).
+        bump all consume the same materialized rows (r9 advisor). An
+        input that is already materialized (``ingest_into`` hands over
+        chunk rows exploded from its own checkpoint) costs one JVM-only
+        checkpoint job here, no Python worker and no input re-scan.
         Mutations serialize on the catalog mutex: the service's async
         batch jobs share one Catalog across threads, and the stats
         read-modify-write below must not interleave.
@@ -356,7 +359,9 @@ class Catalog:
         whose ``document_id`` already exists replace the stored rows
         (content-addressed ids make this the idempotent-reingest path);
         new ids append. One partition rewrite, same cost envelope as a
-        targeted delete. Serialized on the catalog mutex (shared-Catalog
+        targeted delete. The input is materialized once, as in
+        ``add_documents``: the count, the key set and the rewrite read
+        the same rows. Serialized on the catalog mutex (shared-Catalog
         threads; stats read-modify-write)."""
         with self._mutex:
             return self._upsert_documents_locked(collection_name, docs)
@@ -369,6 +374,7 @@ class Catalog:
                 .withColumn("created_at", F.current_timestamp())
                 .withColumn("updated_at", F.current_timestamp())
                 .select([f.name for f in DOCUMENT_SCHEMA.fields])
+                .localCheckpoint()  # evaluate the input exactly once
         )
         n_in = incoming.count()
         n_before = cur.count()
@@ -457,7 +463,14 @@ class Catalog:
         ``target_files`` files (the OPTIMIZE/compaction pass —
         streaming ingest appends a file per micro-batch, and at scale
         the small-file count, not data volume, kills scan planning).
-        Same single-partition rewrite envelope as a targeted delete."""
+        Same single-partition rewrite envelope as a targeted delete.
+        Serialized on the catalog mutex: an append landing between the
+        read and the overwrite would have its file replaced."""
+        with self._mutex:
+            return self._compact_collection_locked(collection_name, target_files)
+
+    def _compact_collection_locked(self, collection_name: str,
+                                   target_files: int) -> dict:
         coll = self._resolve(collection_name)
         part_dir = self._part_dir(coll["id"])
         n_before = 0

@@ -4,10 +4,16 @@ One declarative lineage per batch — the reference's per-document
 sequential loop (validate → id → preprocess → extract → chunk → insert,
 ``src/api/documents.py:85-224``) becomes a single DataFrame plan over
 N documents at once: every stage is a column expression or the chunk
-UDTF, and the write is one distributed append. Per-document error
+UDF, and the write is one distributed append. Per-document error
 isolation (``src/api/documents.py:465-472``) becomes a status column
-routing rows to accepted/rejected side-outputs — no row can kill the
-batch, same contract, no driver loop.
+on a document-level staged frame — no row can kill the batch, same
+contract, no driver loop.
+
+The staged frame (:func:`_stage_documents`) holds every input row,
+valid or rejected, with its validation error, id, extracted columns
+and chunk array. :func:`ingest_into` materializes it once and reads
+both the appended chunk rows and the per-document outcomes from that
+materialization, so the input and the chunker run once per call.
 """
 
 from __future__ import annotations
@@ -24,7 +30,62 @@ from .functions.text import (
     title_col,
     validation_error_col,
 )
-from .operators.chunker import DEFAULT_CHUNK_OVERLAP, DEFAULT_CHUNK_SIZE, chunk_documents
+from .operators.chunker import (
+    DEFAULT_CHUNK_OVERLAP,
+    DEFAULT_CHUNK_SIZE,
+    chunk_arrays,
+    explode_chunks,
+)
+
+
+def _valid() -> Column:
+    return F.col("_validation_error").isNull()
+
+
+def _stage_documents(raw: DataFrame, *, text_col: str = "text",
+                     chunk_size: int | Column = DEFAULT_CHUNK_SIZE,
+                     overlap: int | Column = DEFAULT_CHUNK_OVERLAP,
+                     metadata_cols: tuple[str, ...] = ()) -> DataFrame:
+    """The document-level staged frame: every input row, valid or
+    rejected, with ``_validation_error`` (P10; NULL when valid), the
+    content-addressed ``document_id`` (G2), the extracted columns
+    (A5/G4/G5), the chunk array ``_chunks`` (G3) and ``total_chunks``.
+    Only valid rows are processed: a rejected row keeps its input
+    columns as they are, has a NULL ``document_id`` and passes a NULL
+    text to the chunker, so it chunks to ``[]``."""
+    flagged = raw.withColumn("_validation_error", validation_error_col(F.col(text_col)))
+    text = F.when(_valid(), F.col(text_col))
+    meta = {k: F.col(k) for k in metadata_cols if k in raw.columns}
+    clean = F.col("_clean")
+    # user-supplied title wins over the extracted one (G6 merge order:
+    # extracted stats first, user metadata over them —
+    # src/api/documents.py:174-184)
+    title_expr = (
+        F.coalesce(F.col("title"), title_col(clean))
+        if "title" in meta else title_col(clean)
+    )
+    if "title" in raw.columns:
+        title_expr = F.when(_valid(), title_expr).otherwise(F.col("title"))
+    staged = (
+        flagged.withColumn("document_id", doc_id_col(text, meta))
+               .withColumn("_clean", preprocess_col(text))
+               .withColumn("title", title_expr)
+               .withColumn("content_length", F.length(clean).cast("long"))
+               .withColumn("word_count", F.size(F.filter(F.split(clean, r"\s+"), lambda x: x != "")).cast("long"))
+               .withColumn("line_count", (F.length(clean) - F.length(F.regexp_replace(clean, r"\n", "")) + 1).cast("long"))
+               .withColumn("content_type", content_type_col(clean))
+    )
+    return chunk_arrays(staged, clean, chunk_size=chunk_size, overlap=overlap).drop("_clean")
+
+
+def _chunk_rows(staged: DataFrame, text_col: str) -> DataFrame:
+    """One row per chunk of the staged frame's valid documents, with
+    the stored lexeme column (F3)."""
+    chunks = explode_chunks(
+        staged.filter(_valid()).drop("_validation_error"),
+        text_col=text_col, id_col="document_id",
+    )
+    return chunks.withColumn("content_lexemes", tokens_col(F.col("content")))
 
 
 def prepare_documents(raw: DataFrame, *, text_col: str = "text",
@@ -33,41 +94,18 @@ def prepare_documents(raw: DataFrame, *, text_col: str = "text",
                       metadata_cols: tuple[str, ...] = ()) -> tuple[DataFrame, DataFrame]:
     """Run the full pre-storage pipeline on a DataFrame of raw docs.
 
-    Returns ``(chunks, rejected)``:
+    Returns ``(chunks, rejected)``, both read from one staged frame:
     ``chunks`` — one row per chunk with content-addressed ids (G2),
     preprocessed content (G1), extracted metadata (A5/G4/G5), chunk
     metadata (G3) and the stored lexeme column (F3);
     ``rejected`` — rows that failed validation (P10) with the reason.
     """
-    err = validation_error_col(F.col(text_col))
-    flagged = raw.withColumn("_validation_error", err)
-    rejected = flagged.filter(F.col("_validation_error").isNotNull())
-    ok = flagged.filter(F.col("_validation_error").isNull()).drop("_validation_error")
-
-    meta = {k: F.col(k) for k in metadata_cols if k in raw.columns}
-    # user-supplied title wins over the extracted one (G6 merge order:
-    # extracted stats first, user metadata over them —
-    # src/api/documents.py:174-184)
-    extracted_title = title_col(preprocess_col(F.col(text_col)))
-    title_expr = (
-        F.coalesce(F.col("title"), extracted_title)
-        if "title" in meta else extracted_title
+    staged = _stage_documents(
+        raw, text_col=text_col, chunk_size=chunk_size,
+        overlap=overlap, metadata_cols=metadata_cols,
     )
-    staged = (
-        ok.withColumn("document_id", doc_id_col(F.col(text_col), meta))
-          .withColumn("title", title_expr)
-          .withColumn(text_col, preprocess_col(F.col(text_col)))
-          .withColumn("content_length", F.length(text_col).cast("long"))
-          .withColumn("word_count", F.size(F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != "")).cast("long"))
-          .withColumn("line_count", (F.length(text_col) - F.length(F.regexp_replace(F.col(text_col), r"\n", "")) + 1).cast("long"))
-          .withColumn("content_type", content_type_col(F.col(text_col)))
-    )
-    chunks = chunk_documents(
-        staged, text_col=text_col, id_col="document_id",
-        chunk_size=chunk_size, overlap=overlap,
-    )
-    chunks = chunks.withColumn("content_lexemes", tokens_col(F.col("content")))
-    return chunks, rejected.select(*raw.columns, "_validation_error")
+    rejected = staged.filter(~_valid()).select(*raw.columns, "_validation_error")
+    return _chunk_rows(staged, text_col), rejected
 
 
 def ingest_into(catalog: Catalog, collection_name: str, raw: DataFrame, *,
@@ -80,18 +118,26 @@ def ingest_into(catalog: Catalog, collection_name: str, raw: DataFrame, *,
     count (the reference's ``chunks_created`` always reports 1 — a bug
     consciously not carried over, SURVEY.md §3.2 step 11).
 
+    The staged frame is materialized once (``localCheckpoint``): the
+    chunk rows handed to ``Catalog.add_documents`` and the outcomes
+    below are both read from it, so the input and the chunk UDF are
+    evaluated exactly once per call — the invariant ``add_documents``
+    keeps for its own input.
+
     With ``idx_col`` (a caller-supplied per-document key column), the
-    result also carries ``documents``: one dict per input row with the
-    content-addressed ``document_id`` (G2 — computed IN the plan, never
-    re-read from storage), ``chunks_created`` and the validation
-    ``error`` if any. This is how batch ingest gets per-document
+    result also carries ``documents``: one dict per input row, in input
+    order, with the content-addressed ``document_id`` (G2 — computed IN
+    the plan, never re-read from storage), ``chunks_created`` and the
+    validation ``error`` if any, all from one collect of the
+    materialized frame. This is how batch ingest gets per-document
     outcomes from a single distributed write instead of a driver loop.
     ``chunk_size``/``overlap`` accept a Column for per-document
     overrides."""
-    chunks, rejected = prepare_documents(
+    staged = _stage_documents(
         raw, text_col=text_col, chunk_size=chunk_size,
         overlap=overlap, metadata_cols=metadata_cols,
-    )
+    ).drop(text_col).localCheckpoint()  # raw text is not read past the chunker
+    chunks = _chunk_rows(staged, text_col)
     meta_entries = [
         (F.lit("chunk_index"), F.col("chunk_index").cast("string")),
         (F.lit("start_char"), F.col("start_char").cast("string")),
@@ -130,28 +176,19 @@ def ingest_into(catalog: Catalog, collection_name: str, raw: DataFrame, *,
     n_chunks = catalog.add_documents(collection_name, rows)
     out = {"chunks_created": n_chunks}
     if idx_col is None:
-        out["documents_rejected"] = rejected.count()
+        out["documents_rejected"] = staged.filter(~_valid()).count()
         return out
-    rej = {
-        r[idx_col]: r["_validation_error"]
-        for r in rejected.select(idx_col, "_validation_error").collect()
-    }
-    acc = {
-        r[idx_col]: (r["document_id"], r["n"])
-        for r in chunks.groupBy(idx_col, "document_id")
-                       .agg(F.count("*").alias("n")).collect()
-    }
+    outcomes = staged.select(idx_col, "document_id", "total_chunks",
+                             "_validation_error").collect()
     docs = []
-    for r in raw.select(idx_col).collect():
-        i = r[idx_col]
-        doc_id, n = acc.get(i, (None, 0))
-        err = rej.get(i)
+    for r in outcomes:
+        n, err = r["total_chunks"], r["_validation_error"]
         if err is None and n == 0:
             err = "Document produced no chunks"
         docs.append({
-            "idx": i, "document_id": doc_id,
+            "idx": r[idx_col], "document_id": r["document_id"] if n else None,
             "chunks_created": n, "error": err,
         })
-    out["documents_rejected"] = len(rej)
+    out["documents_rejected"] = sum(r["_validation_error"] is not None for r in outcomes)
     out["documents"] = docs
     return out

@@ -138,27 +138,34 @@ def chunks_udf_per_row():
     return _chunks
 
 
-def chunk_documents(df: DataFrame, *, text_col: str = "text",
-                    id_col: str = "doc_id",
-                    chunk_size: int | Column = DEFAULT_CHUNK_SIZE,
-                    overlap: int | Column = DEFAULT_CHUNK_OVERLAP) -> DataFrame:
-    """1 document row in → N chunk rows out (the UDTF shape:
-    array-returning pandas UDF + explode). Chunk id mirrors the
-    reference's ``{doc_id}_chunk_{i}`` (``src/api/documents.py:187``)
-    and ``total_chunks`` its per-document count (`:174-184`).
-    ``chunk_size``/``overlap`` accept Columns for per-row overrides."""
+def chunk_arrays(df: DataFrame, text: Column, *,
+                 chunk_size: int | Column = DEFAULT_CHUNK_SIZE,
+                 overlap: int | Column = DEFAULT_CHUNK_OVERLAP) -> DataFrame:
+    """The document-level half of :func:`chunk_documents`: adds the
+    chunk array ``_chunks`` (the chunk UDF over ``text``; a NULL text
+    chunks to ``[]``) and its per-document count ``total_chunks``
+    (``src/api/documents.py:174-184``). ``chunk_size``/``overlap``
+    accept Columns for per-row overrides."""
     if isinstance(chunk_size, Column) or isinstance(overlap, Column):
         size_col = chunk_size if isinstance(chunk_size, Column) else F.lit(chunk_size)
         over_col = overlap if isinstance(overlap, Column) else F.lit(overlap)
-        chunks = chunks_udf_per_row()(
-            F.col(text_col), size_col.cast("int"), over_col.cast("int")
-        )
+        chunks = chunks_udf_per_row()(text, size_col.cast("int"), over_col.cast("int"))
     else:
-        chunks = chunks_udf(chunk_size, overlap)(F.col(text_col))
-    exploded = (
+        chunks = chunks_udf(chunk_size, overlap)(text)
+    return (
         df.withColumn("_chunks", chunks)
           .withColumn("total_chunks", F.size("_chunks"))
-          .withColumn("chunk", F.explode("_chunks"))
+    )
+
+
+def explode_chunks(df: DataFrame, *, text_col: str = "text",
+                   id_col: str = "doc_id") -> DataFrame:
+    """The row-level half of :func:`chunk_documents`: one row per
+    element of ``_chunks``. Chunk id mirrors the reference's
+    ``{doc_id}_chunk_{i}`` (``src/api/documents.py:187``); every other
+    column of ``df`` except ``text_col`` rides along."""
+    exploded = (
+        df.withColumn("chunk", F.explode("_chunks"))
           .drop("_chunks", text_col)
     )
     return (
@@ -174,9 +181,21 @@ def chunk_documents(df: DataFrame, *, text_col: str = "text",
             F.col("chunk.is_first_chunk").alias("is_first_chunk"),
             F.col("chunk.is_last_chunk").alias("is_last_chunk"),
             F.col("total_chunks"),
-            *[F.col(c) for c in df.columns if c not in (text_col, id_col)],
+            *[F.col(c) for c in df.columns
+              if c not in (text_col, id_col, "_chunks", "total_chunks")],
         )
     )
+
+
+def chunk_documents(df: DataFrame, *, text_col: str = "text",
+                    id_col: str = "doc_id",
+                    chunk_size: int | Column = DEFAULT_CHUNK_SIZE,
+                    overlap: int | Column = DEFAULT_CHUNK_OVERLAP) -> DataFrame:
+    """1 document row in → N chunk rows out (the UDTF shape:
+    array-returning pandas UDF + explode): :func:`chunk_arrays` then
+    :func:`explode_chunks`."""
+    arrays = chunk_arrays(df, F.col(text_col), chunk_size=chunk_size, overlap=overlap)
+    return explode_chunks(arrays, text_col=text_col, id_col=id_col)
 
 
 def make_chunker_udtf(chunk_size: int = DEFAULT_CHUNK_SIZE,

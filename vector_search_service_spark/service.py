@@ -138,9 +138,10 @@ class SearchService:
             "author string, type string, _chunk_size int, _chunk_overlap int",
         )
         # deliberately NOT coalesced: a 1-partition batch serializes
-        # the ~10 UDF stages of the ingest pipeline onto one Python
-        # worker (measured 3x slower per batch than letting the 50
-        # rows spread — scripts/postings_scale.py isolate). The
+        # the ingest pipeline's Python work — the input scan of this
+        # local frame and the one pandas UDF, the chunker — onto one
+        # Python worker (measured 3x slower per batch than letting the
+        # 50 rows spread — scripts/postings_scale.py isolate). The
         # small-file problem lives on the WRITE side and is fixed
         # there (catalog.add_documents sizes its append fan-out from
         # the batch row count).
