@@ -507,18 +507,36 @@ def test_compact_collection_holds_catalog_mutex(catalog, spark, monkeypatch):
             "document_id string, content string, doc_metadata map<string,string>, "
             "content_lexemes array<string>, embedding array<float>",
         ))
-    orig = Catalog._dynamic_overwrite
+    orig = Catalog._replace_partition
     held = []
 
-    def checked(self):
+    def checked(self, *args):
         held.append(self._mutex._is_owned())
-        return orig(self)
+        return orig(self, *args)
 
-    monkeypatch.setattr(Catalog, "_dynamic_overwrite", checked)
+    monkeypatch.setattr(Catalog, "_replace_partition", checked)
     out = catalog.compact_collection("cm", target_files=1)
     assert held == [True]
     assert out["files_after"] == 1
     assert catalog.documents("cm").count() == 6
+
+
+def test_delete_null_id_matches_no_row(catalog, spark):
+    """SQL IN semantics: ``document_id IN ('d0', NULL)`` is TRUE for
+    d0 and NULL, not TRUE, for every other row, so only d0 is deleted.
+    A bare ``~isin`` filter would drop every row."""
+    catalog.create_collection("nul")
+    catalog.add_documents("nul", spark.createDataFrame(
+        [(f"d{i}", f"content {i}", {}, None, None) for i in range(5)],
+        "document_id string, content string, doc_metadata map<string,string>, "
+        "content_lexemes array<string>, embedding array<float>",
+    ))
+    assert catalog.delete_documents("nul", ["d0", None]) == 1
+    assert sorted(r["document_id"] for r in catalog.documents("nul").collect()) \
+        == ["d1", "d2", "d3", "d4"]
+    assert catalog.collection_stats("nul")["document_count"] == 4
+    assert catalog.delete_documents("nul", [None]) == 0
+    assert catalog.documents("nul").count() == 4
 
 
 def test_readers_stay_live_during_mutations(catalog, spark):
@@ -752,6 +770,23 @@ def test_postings_crash_mid_compact_leaves_complete_snapshot(
     assert cat.compact_index("kb") == n_rows
     for t, expect in pins.items():
         assert _matches(cat, coll_id, list(t)) == expect, t
+
+
+def test_compact_collection_rebuilds_maintained_postings(indexed_cat):
+    """compact_collection goes through the same partition replace as
+    delete and upsert, so on a maintained catalog it also rebuilds the
+    postings snapshot: the matches stay the same and the snapshot
+    version advances."""
+    cat = indexed_cat
+    coll_id = cat.get_collection("kb")["id"]
+    terms = (("spark",), ("spark", "batch3"), ("absent",))
+    before = {t: _matches(cat, coll_id, list(t)) for t in terms}
+    version = cat.postings._current_version(coll_id)
+    out = cat.compact_collection("kb", target_files=1)
+    assert out["files_after"] == 1
+    assert {t: _matches(cat, coll_id, list(t)) for t in terms} == before
+    assert int(cat.postings._current_version(coll_id)[1:]) > int(version[1:])
+    assert cat.collection_stats("kb")["document_count"] == 30
 
 
 def test_postings_crash_mid_rewrite_keeps_old_index_live(

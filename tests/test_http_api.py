@@ -177,6 +177,13 @@ def test_document_listing_and_delete_routes(client):
                    "requested_deletions": 2}
     assert client.delete("/api/v1/collections/ghost/documents",
                          json={"document_ids": ["x"]}).status_code == 404
+    # document_ids is the reference's pydantic List[str]: a non-string
+    # element is a request-model violation (422), not a silent no-op
+    for bad in ([1], [None]):
+        r = client.delete("/api/v1/collections/dl/documents",
+                          json={"document_ids": bad})
+        assert r.status_code == 422, bad
+        assert "detail" in r.get_json()
     assert ing["chunks_created"] >= 1
 
 

@@ -117,6 +117,86 @@ def test_warm_ingest_document_job_budget(spark, tmp_path):
     assert sum("ingest.py" in n for n in names) == 1, names
 
 
+def test_warm_delete_job_budget(spark, tmp_path):
+    """A warm delete on a maintained-postings service runs 4 Spark
+    jobs: one aggregate (two jobs) for the stored and deleted counts,
+    then the documents and postings parquet writes. A no-op delete
+    runs the aggregate only. The ids are a literal IN-list, so no job
+    builds or broadcasts a frame of them."""
+    import uuid
+
+    from vector_search_service_spark.service import SearchService
+
+    svc = SearchService(spark, str(tmp_path / "store"), maintain_fts_index=True)
+    for i in range(3):
+        svc.ingest_document(f"delete budget doc {i} alpha beta " * 30,
+                            collection_id="db")
+    ids = sorted(r["id"] for r in svc.list_documents("db"))
+    svc.delete_documents("db", [ids[0]])  # warm-up
+    sc = spark.sparkContext
+
+    def jobs_of(document_ids):
+        group = f"delete-budget-{uuid.uuid4()}"
+        sc.setJobGroup(group, "job budget")
+        try:
+            out = svc.delete_documents("db", document_ids)
+        finally:
+            sc.setJobGroup("", "")
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+
+    out, jobs = jobs_of([ids[1]])
+    assert out["documents_deleted"] == 1
+    assert len(jobs) < 8
+    assert len(jobs) == 4
+    store = sc._jsc.sc().statusStore()
+    assert sum("parquet" in store.job(j).name() for j in jobs) == 2
+    out, jobs = jobs_of(["no-such-chunk"])
+    assert out["documents_deleted"] == 0
+    assert len(jobs) < 5
+    assert len(jobs) == 2
+    assert sorted(r["id"] for r in svc.list_documents("db")) == ids[2:]
+
+
+def test_mutations_leave_session_conf_alone(spark, tmp_path, monkeypatch):
+    """Delete, upsert and compaction ask for dynamic partition
+    overwrite per write; none of them sets it on the shared session,
+    where it would leak into every other writer of that session."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from vector_search_service_spark.catalog import Catalog
+
+    assert isinstance(spark.conf, RuntimeConfig)
+    keys = []
+    orig = RuntimeConfig.set
+
+    def recording(self, key, value):
+        keys.append(key)
+        return orig(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording)
+    cat = Catalog(spark, str(tmp_path / "store"), maintain_fts_index=True)
+    cat.create_collection("conf")
+
+    def rows(ids, text):
+        return spark.createDataFrame(
+            [(f"d{i}", text, {}, text.split(), None) for i in ids],
+            "document_id string, content string, doc_metadata map<string,string>, "
+            "content_lexemes array<string>, embedding array<float>",
+        )
+
+    cat.add_documents("conf", rows(range(4), "alpha beta"))
+    assert cat.delete_documents("conf", ["d0"]) == 1
+    assert cat.upsert_documents("conf", rows([3, 4], "gamma")) == \
+        {"inserted": 1, "updated": 1}
+    assert cat.compact_collection("conf")["files_after"] == 1
+    assert sorted(r["document_id"] for r in cat.documents("conf").collect()) == \
+        ["d1", "d2", "d3", "d4"]
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   spark.conf.get("spark.sql.shuffle.partitions"))
+    assert "spark.sql.shuffle.partitions" in keys  # the patch sees sets
+    assert "spark.sql.sources.partitionOverwriteMode" not in keys
+
+
 def test_document_listing_delete_stats(svc):
     svc.ingest_document("alpha beta gamma delta " * 10, collection_id="kb2")
     listing = svc.list_documents("kb2")

@@ -45,6 +45,47 @@ def test_streaming_ingest(spark, tmp_path, catalog):
                       id_col="document_id").count() >= 1
 
 
+def test_stream_stores_same_rows_as_batch_ingest(spark, tmp_path, catalog):
+    """The stream sink is ``ingest_into``: a streamed document stores
+    the same rows as the same input through batch ingest, metadata
+    included, so ``metadata_filter`` finds streamed documents."""
+    from vector_search_service_spark.ingest import ingest_into
+    from vector_search_service_spark.service import SearchService
+    from vector_search_service_spark.streaming.ingest_stream import start_ingest_stream
+
+    catalog.create_collection("streamed")
+    catalog.create_collection("batched")
+    raw = spark.createDataFrame(
+        [(1, "alpha beta gamma " * 10, "s1"), (2, "delta epsilon zeta " * 10, "s2")],
+        "doc_id long, text string, source string",
+    )
+    inbox = tmp_path / "inbox"
+    raw.coalesce(1).write.parquet(str(inbox))
+    q = start_ingest_stream(
+        spark, catalog, collection_name="streamed",
+        input_dir=str(inbox), checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    ingest_into(catalog, "batched", raw, metadata_cols=("source",))
+
+    def stored(name):
+        return sorted(
+            (r["document_id"], r["content"], sorted(r["doc_metadata"].items()),
+             r["content_lexemes"])
+            for r in catalog.documents(name).collect()
+        )
+
+    assert len(stored("streamed")) == 2
+    assert stored("streamed") == stored("batched")
+    svc = SearchService(spark, catalog.root)
+    hits = svc.similarity_search("alpha beta", collection_id="streamed",
+                                 metadata_filter={"source": "s1"})
+    assert hits["total_found"] == 1
+
+
 def test_upsert_documents(spark, catalog):
     catalog.create_collection("ups")
 

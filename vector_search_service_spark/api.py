@@ -229,6 +229,8 @@ def create_app(service):
         ids = data.get("document_ids") if isinstance(data, dict) else data
         if not isinstance(ids, list):
             raise _Unprocessable("document_ids is required")
+        if not all(isinstance(i, str) for i in ids):  # pydantic List[str]
+            raise _Unprocessable("document_ids must be a list of strings")
         if service.get_collection_info(collection_name) is None:
             return err(404, f"Collection '{collection_name}' not found")
         out = service.delete_documents(collection_name, ids)

@@ -13,9 +13,10 @@ only over the documents. PostgreSQL features are re-owned explicitly:
 - FK ``ON DELETE CASCADE`` (``scripts/init-db.sql:20``) → write-path
   ordering: drop the collection's document partition, then its catalog
   entry (S7);
-- targeted DELETE (S6, ``src/core/vector_store.py:360-392``) →
-  anti-join + dynamic partition overwrite of only the affected
-  partition;
+- targeted DELETE (S6, ``src/core/vector_store.py:360-392``) → the
+  reference's IN-list as a filter, then one partition replace
+  (``_replace_partition``, shared with upsert and compaction): a
+  per-write dynamic overwrite of only the affected partition;
 - GIN/B-tree indexes → hive partitioning on ``collection_id`` (every
   reference query filters on it, ``src/core/vector_store.py:223``), so
   partition pruning reads only one collection's files. At 100 TB this
@@ -306,98 +307,58 @@ class Catalog:
             return self.postings.compact(coll["id"])
 
     def delete_documents(self, collection_name: str, document_ids: list[str]) -> int:
-        """S6 — targeted delete via anti-join, rewriting ONLY the one
-        collection partition (dynamic overwrite keeps every other
-        partition untouched — at scale, a delete costs one partition's
-        rewrite, not the table's). Serialized on the catalog mutex
-        (shared-Catalog threads; stats read-modify-write)."""
+        """S6 — targeted delete: the reference's ``DELETE ... WHERE
+        collection_id = :cid AND document_id IN (...)`` as a literal
+        IN-list filter (no Python-side frame, no join), then one
+        ``_replace_partition`` of the collection's partition. SQL
+        semantics hold: only rows whose IN test is TRUE are deleted, so
+        a NULL id matches nothing. ``before`` and the deleted count
+        come from one aggregate over the store, so a delete also heals
+        stale stats. Serialized on the catalog mutex (shared-Catalog
+        threads; stats read-modify-write)."""
         with self._mutex:
-            return self._delete_documents_locked(collection_name, document_ids)
-
-    def _delete_documents_locked(self, collection_name: str,
-                                 document_ids: list[str]) -> int:
-        coll = self._resolve(collection_name)
-        cur = self.documents(collection_name)
-        before = cur.count()
-        ids_df = self.spark.createDataFrame(
-            [(d,) for d in document_ids], "document_id string"
-        )
-        # bound: the API caps delete batches (max_batch_documents = 50,
-        # reference src/config/settings.py:53) — the anti_join_delete
-        # discipline (r10 audit)
-        remaining = cur.join(F.broadcast(ids_df), "document_id", "left_anti")
-        after = remaining.count()
-        if after == before:
-            return 0
-        if after == 0:
-            # dynamic overwrite of an EMPTY frame writes no partitions
-            # and would silently leave the old files — drop the
-            # partition directory instead
-            part_dir = self._part_dir(coll["id"])
-            if os.path.exists(part_dir):
-                shutil.rmtree(part_dir)
-            if self.postings is not None:
-                self.postings.rewrite(coll["id"], None)
-            self._store_stats(collection_name, 0)
-            return before
-        with self._dynamic_overwrite():
-            (
-                remaining.withColumn("collection_id", F.lit(coll["id"]).cast("long"))
-                .select([f.name for f in DOCUMENT_SCHEMA.fields])
-                .write.mode("overwrite").partitionBy("collection_id")
-                .parquet(self.documents_path)
-            )
-        if self.postings is not None:
-            # re-read: the lazy `remaining` plan is bound to the
-            # overwritten files
-            self.postings.rewrite(coll["id"], self.documents(collection_name))
-        self._store_stats(collection_name, after)
-        return before - after
+            coll = self._resolve(collection_name)
+            cur = self.documents(collection_name)
+            hit = F.coalesce(F.col("document_id").isin(document_ids), F.lit(False))
+            counts = cur.agg(F.count("*").alias("before"),
+                             F.count_if(hit).alias("deleted")).first()
+            if counts["deleted"]:
+                self._replace_partition(collection_name, coll, cur.filter(~hit),
+                                        counts["before"] - counts["deleted"])
+            return counts["deleted"]
 
     def upsert_documents(self, collection_name: str, docs: DataFrame) -> dict:
         """Merge-by-key (Delta MERGE stand-in on plain parquet): rows
         whose ``document_id`` already exists replace the stored rows
         (content-addressed ids make this the idempotent-reingest path);
-        new ids append. One partition rewrite, same cost envelope as a
+        new ids append. One ``_replace_partition``, the same step as a
         targeted delete. The input is materialized once, as in
-        ``add_documents``: the count, the key set and the rewrite read
+        ``add_documents``: the counts, the key set and the rewrite read
         the same rows. Serialized on the catalog mutex (shared-Catalog
         threads; stats read-modify-write)."""
         with self._mutex:
-            return self._upsert_documents_locked(collection_name, docs)
-
-    def _upsert_documents_locked(self, collection_name: str, docs: DataFrame) -> dict:
-        coll = self._resolve(collection_name)
-        cur = self.documents(collection_name)
-        incoming = (
-            docs.withColumn("collection_id", F.lit(coll["id"]).cast("long"))
-                .withColumn("created_at", F.current_timestamp())
-                .withColumn("updated_at", F.current_timestamp())
-                .select([f.name for f in DOCUMENT_SCHEMA.fields])
-                .localCheckpoint()  # evaluate the input exactly once
-        )
-        n_in = incoming.count()
-        n_before = cur.count()
-        keys = incoming.select("document_id").distinct()
-        # bound: upsert batches arrive through the same API batch cap
-        # as deletes (≤ 50 docs/request; r10 audit)
-        kept = cur.join(F.broadcast(keys), "document_id", "left_anti")
-        merged = kept.unionByName(incoming)
-        with self._dynamic_overwrite():
-            (
-                merged.withColumn("collection_id", F.lit(coll["id"]).cast("long"))
-                .select([f.name for f in DOCUMENT_SCHEMA.fields])
-                .write.mode("overwrite").partitionBy("collection_id")
-                .parquet(self.documents_path)
+            coll = self._resolve(collection_name)
+            cur = self.documents(collection_name)
+            incoming = (
+                docs.withColumn("collection_id", F.lit(coll["id"]).cast("long"))
+                    .withColumn("created_at", F.current_timestamp())
+                    .withColumn("updated_at", F.current_timestamp())
+                    .select([f.name for f in DOCUMENT_SCHEMA.fields])
+                    .localCheckpoint()  # evaluate the input exactly once
             )
-        n_after = self.documents(collection_name).count()
-        if self.postings is not None:
-            self.postings.rewrite(coll["id"], self.documents(collection_name))
-        self._store_stats(collection_name, n_after)
-        return {
-            "inserted": n_after - n_before if n_after >= n_before else 0,
-            "updated": n_in - max(n_after - n_before, 0),
-        }
+            n_in = incoming.count()
+            n_before = cur.count()
+            keys = incoming.select("document_id").distinct()
+            # bound: upsert batches arrive through the same API batch cap
+            # as deletes (≤ 50 docs/request; r10 audit)
+            kept = cur.join(F.broadcast(keys), "document_id", "left_anti")
+            merged = kept.unionByName(incoming)
+            n_after = merged.count()
+            self._replace_partition(collection_name, coll, merged, n_after)
+            return {
+                "inserted": n_after - n_before if n_after >= n_before else 0,
+                "updated": n_in - max(n_after - n_before, 0),
+            }
 
     def collection_stats(self, collection_name: str, *, refresh: bool = False) -> dict:
         """A1 + A2 — document count and storage bytes
@@ -463,37 +424,24 @@ class Catalog:
         ``target_files`` files (the OPTIMIZE/compaction pass —
         streaming ingest appends a file per micro-batch, and at scale
         the small-file count, not data volume, kills scan planning).
-        Same single-partition rewrite envelope as a targeted delete.
-        Serialized on the catalog mutex: an append landing between the
-        read and the overwrite would have its file replaced."""
+        The same ``_replace_partition`` step as a targeted delete, so a
+        maintained postings snapshot is rebuilt too, and the count is
+        taken from the store. Serialized on the catalog mutex: an
+        append landing between the read and the overwrite would have
+        its file replaced."""
         with self._mutex:
-            return self._compact_collection_locked(collection_name, target_files)
+            coll = self._resolve(collection_name)
+            part_dir = self._part_dir(coll["id"])
 
-    def _compact_collection_locked(self, collection_name: str,
-                                   target_files: int) -> dict:
-        coll = self._resolve(collection_name)
-        part_dir = self._part_dir(coll["id"])
-        n_before = 0
-        if os.path.exists(part_dir):
-            n_before = sum(
-                1 for _, _, files in os.walk(part_dir)
-                for f in files if f.endswith(".parquet")
-            )
-        cur = self.documents(collection_name)
-        with self._dynamic_overwrite():
-            (
-                cur.repartition(target_files)
-                .withColumn("collection_id", F.lit(coll["id"]).cast("long"))
-                .select([f.name for f in DOCUMENT_SCHEMA.fields])
-                .write.mode("overwrite").partitionBy("collection_id")
-                .parquet(self.documents_path)
-            )
-        n_after = sum(
-            1 for _, _, files in os.walk(part_dir)
-            for f in files if f.endswith(".parquet")
-        )
-        self._store_stats(collection_name)  # count unchanged; byte size rewritten
-        return {"files_before": n_before, "files_after": n_after}
+            def n_files() -> int:
+                return sum(1 for _, _, files in os.walk(part_dir)
+                           for f in files if f.endswith(".parquet"))
+
+            n_before = n_files()
+            cur = self.documents(collection_name)
+            self._replace_partition(collection_name, coll,
+                                    cur.repartition(target_files), cur.count())
+            return {"files_before": n_before, "files_after": n_files()}
 
     # -- helpers -----------------------------------------------------------
 
@@ -503,15 +451,29 @@ class Catalog:
             raise ValueError(f"Collection '{name}' not found")
         return coll
 
-    def _dynamic_overwrite(self):
-        spark = self.spark
-
-        class _Ctx:
-            def __enter__(self):
-                self.prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-            def __exit__(self, *exc):
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", self.prev)
-
-        return _Ctx()
+    def _replace_partition(self, name: str, coll: dict, rows: DataFrame,
+                           n: int) -> None:
+        """Replace one collection's stored partition with ``rows``
+        (``n`` of them, counted by the caller) — the one rewrite step
+        behind delete, upsert and compaction; callers hold the mutex.
+        ``n == 0`` drops the partition directory (a dynamic overwrite
+        of an empty frame writes no partition and would leave the old
+        files); otherwise a per-write dynamic overwrite replaces this
+        collection's partition and leaves every other one untouched.
+        Then the postings snapshot is rebuilt from the re-read
+        partition, or dropped, and the stats are stored."""
+        if n == 0:
+            part_dir = self._part_dir(coll["id"])
+            if os.path.exists(part_dir):
+                shutil.rmtree(part_dir)
+        else:
+            (
+                rows.withColumn("collection_id", F.lit(coll["id"]).cast("long"))
+                .select([f.name for f in DOCUMENT_SCHEMA.fields])
+                .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+                .partitionBy("collection_id").parquet(self.documents_path)
+            )
+        if self.postings is not None:
+            # re-read: ``rows`` is bound to the overwritten files
+            self.postings.rewrite(coll["id"], self.documents(name) if n else None)
+        self._store_stats(name, n)

@@ -14,6 +14,9 @@ valid or rejected, with its validation error, id, extracted columns
 and chunk array. :func:`ingest_into` materializes it once and reads
 both the appended chunk rows and the per-document outcomes from that
 materialization, so the input and the chunker run once per call.
+It is the one ingest path: the service, batch jobs and the streaming
+sink (``streaming/ingest_stream.py``) all call it, so every document
+is stored with the same rows and metadata.
 """
 
 from __future__ import annotations
@@ -78,36 +81,6 @@ def _stage_documents(raw: DataFrame, *, text_col: str = "text",
     return chunk_arrays(staged, clean, chunk_size=chunk_size, overlap=overlap).drop("_clean")
 
 
-def _chunk_rows(staged: DataFrame, text_col: str) -> DataFrame:
-    """One row per chunk of the staged frame's valid documents, with
-    the stored lexeme column (F3)."""
-    chunks = explode_chunks(
-        staged.filter(_valid()).drop("_validation_error"),
-        text_col=text_col, id_col="document_id",
-    )
-    return chunks.withColumn("content_lexemes", tokens_col(F.col("content")))
-
-
-def prepare_documents(raw: DataFrame, *, text_col: str = "text",
-                      chunk_size: int | Column = DEFAULT_CHUNK_SIZE,
-                      overlap: int | Column = DEFAULT_CHUNK_OVERLAP,
-                      metadata_cols: tuple[str, ...] = ()) -> tuple[DataFrame, DataFrame]:
-    """Run the full pre-storage pipeline on a DataFrame of raw docs.
-
-    Returns ``(chunks, rejected)``, both read from one staged frame:
-    ``chunks`` — one row per chunk with content-addressed ids (G2),
-    preprocessed content (G1), extracted metadata (A5/G4/G5), chunk
-    metadata (G3) and the stored lexeme column (F3);
-    ``rejected`` — rows that failed validation (P10) with the reason.
-    """
-    staged = _stage_documents(
-        raw, text_col=text_col, chunk_size=chunk_size,
-        overlap=overlap, metadata_cols=metadata_cols,
-    )
-    rejected = staged.filter(~_valid()).select(*raw.columns, "_validation_error")
-    return _chunk_rows(staged, text_col), rejected
-
-
 def ingest_into(catalog: Catalog, collection_name: str, raw: DataFrame, *,
                 text_col: str = "text",
                 metadata_cols: tuple[str, ...] = (),
@@ -137,7 +110,12 @@ def ingest_into(catalog: Catalog, collection_name: str, raw: DataFrame, *,
         raw, text_col=text_col, chunk_size=chunk_size,
         overlap=overlap, metadata_cols=metadata_cols,
     ).drop(text_col).localCheckpoint()  # raw text is not read past the chunker
-    chunks = _chunk_rows(staged, text_col)
+    # one row per chunk of the valid documents, with the stored lexeme
+    # column (F3)
+    chunks = explode_chunks(
+        staged.filter(_valid()).drop("_validation_error"),
+        text_col=text_col, id_col="document_id",
+    ).withColumn("content_lexemes", tokens_col(F.col("content")))
     meta_entries = [
         (F.lit("chunk_index"), F.col("chunk_index").cast("string")),
         (F.lit("start_char"), F.col("start_char").cast("string")),

@@ -11,8 +11,9 @@ finishes.
 
 The reference logs coarse per-request stats in Python
 (`src/api/documents.py` response models); this is the engine-side
-equivalent wired into distributed jobs. Used standalone or around
-`ingest.prepare_documents`' accepted/rejected split."""
+equivalent wired into distributed jobs. Used standalone or on the
+raw frame handed to `ingest.ingest_into`, whose staged checkpoint is
+the action that fills the observation."""
 
 from __future__ import annotations
 

@@ -1,7 +1,8 @@
 """Streaming ingestion (SURVEY.md §2.10 Q2's streaming-native
 upgrade): documents arriving as a file stream run through the SAME
-batch pipeline (``ingest.prepare_documents``) inside ``foreachBatch``,
-appending to the catalog store with per-batch job bookkeeping.
+batch ingest (``ingest.ingest_into``) inside ``foreachBatch``, so a
+streamed document stores exactly the rows — chunk metadata, extracted
+stats and the ``source`` column — that batch ingest stores.
 
 ``foreachBatch`` is the right primitive here because the sink is our
 partitioned-parquet catalog (no native streaming sink): each
@@ -17,7 +18,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from ..catalog import Catalog
-from ..ingest import prepare_documents
+from ..ingest import ingest_into
 
 RAW_DOC_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType(), True),
@@ -33,8 +34,6 @@ def start_ingest_stream(spark: SparkSession, catalog: Catalog, *,
     """Watch ``input_dir`` for parquet drops of raw documents and
     ingest them continuously. Returns the StreamingQuery (caller owns
     stop())."""
-    from pyspark.sql import functions as F
-
     stream = (
         spark.readStream.schema(RAW_DOC_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -42,19 +41,7 @@ def start_ingest_stream(spark: SparkSession, catalog: Catalog, *,
     )
 
     def sink(batch_df, batch_id: int) -> None:
-        chunks, _rejected = prepare_documents(batch_df, metadata_cols=("source",))
-        meta = F.map_from_arrays(
-            F.array(F.lit("chunk_index"), F.lit("document_id")),
-            F.array(F.col("chunk_index").cast("string"), F.col("document_id")),
-        )
-        rows = chunks.select(
-            F.col("chunk_id").alias("document_id"),
-            F.col("content"),
-            meta.alias("doc_metadata"),
-            F.col("content_lexemes"),
-            F.lit(None).cast("array<float>").alias("embedding"),
-        )
-        catalog.add_documents(collection_name, rows)
+        ingest_into(catalog, collection_name, batch_df, metadata_cols=("source",))
 
     return (
         stream.writeStream.foreachBatch(sink)
